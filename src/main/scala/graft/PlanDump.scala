@@ -33,7 +33,7 @@ object PlanDump {
     "a20_region_merge" -> "region merge: both views are ONE RDD scan each (one task per merged region — no union-of-legs wave-serialization), feeding a single partial+final hash agg; the merge itself is metadata-only so no write stage appears beyond the fixture bulk load",
     "a21_wal_replicate" -> "WAL-shipping replication: the gated read is one RDD scan of the replica's segments (one task per segment) into a partial+final hash agg; the ship is an embarrassingly-parallel names-only RDD job that never enters this plan",
     "b32_cell_ttl" -> "cell TTL: one RDD scan of the tagged store (ttl decoded per cell), expiry predicate evaluated BEFORE the coordinate window shuffle, one window exchange then partial+final agg",
-    "j60_langid" -> "char-n-gram langid: vocabulary-bounded profile aggregations, broadcast profile/langs/defaults joins on the (doc,gram) pre-aggregate (corpus shuffles only on its own doc-keyed aggs), bounded-heap TopKPerGroup argmax",
+    "j60_langid" -> "char-n-gram langid: one vocabulary-bounded (lang, gram) count aggregation over the native shingles kernel, collected as the model; scoring is a row-local scorer over the broadcast model (no corpus shuffle), then one (lang, pred) aggregate",
     "a22_namespace_admin" -> "namespace admin: per-table clone reads union without cross-table shuffle, one (table,qualifier) agg, the metadata listing joined as a broadcast",
     "j47_curate_e2e" -> "end-to-end curation (admit→paragraph-dedup→scrub→LM-filter→mix→pack): each stage keeps its gated operator's shape — the corpus explodes once per text-granularity stage (the chunk Generate over the admit union, the bigram Generate over the CHECKPOINTED scrub output — never re-derived; the LM stage's support feeds model and scoring from one materialization), scrub is map-only, the mix table is a broadcast 5-row join, and the two global orders are the distributed ntile/cumsum range-exchange forms; no stage re-explodes or re-reads an earlier stage's input",
     "a32_server_drain" -> "graceful-stop drain plan: everything past the placement checkpoint is region METADATA — no FileScan, survivor/dest tables broadcast, serpentine rank window partitioned by group; the coverage raise rides the final projection behind LEFT joins (AQE-safe)",

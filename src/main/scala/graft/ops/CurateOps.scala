@@ -78,7 +78,7 @@ object CurateOps {
     val pred = LangIdOps.predict(docs, LangIdOps.train(labeled, n))
       .withColumnRenamed("pred", "lang")
     // LEFT join: predict() emits no row for a doc whose text is shorter
-    // than one n-gram (explodeGrams keeps length >= n), and an inner
+    // than one n-gram (the scorer keeps length >= n), and an inner
     // join would silently DROP such docs from the curation stream
     // (ADVICE r14). Unpredictable docs survive with the fastText-style
     // "und" (undetermined) label instead of vanishing.

@@ -1,10 +1,11 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.Shingles
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Character-n-gram language identification — the langid pass every
   * published curation stack runs before language-conditional filtering
@@ -15,102 +16,93 @@ import org.apache.spark.sql.types.DecimalType
   * summed n-gram log-probabilities — multinomial Naive Bayes over
   * char n-grams, the standard n-gram heuristic.
   *
-  * Spark-first shape, all relational:
-  *  - TRAIN is two aggregations over one n-gram explode of the labeled
-  *    corpus (per-(lang, gram) counts + per-lang totals) — shuffles are
-  *    vocabulary-bounded after map-side combine, never all-pairs, and
-  *    the model STAYS a DataFrame (nothing collects to the driver).
-  *  - SCORE pre-aggregates each document's grams to (doc, gram, k) —
-  *    multiplicity as a factor, so the per-doc work is DISTINCT grams,
-  *    not occurrences — then broadcast-joins the vocabulary×languages
-  *    profile table and sums k·logp per (doc, candidate). The corpus
-  *    never shuffles until the per-doc aggregate.
-  *  - ARGMAX is a row_number window the TopKPerGroup rewrite turns into
-  *    the bounded-heap operator (no per-doc sort).
+  * Two kernels:
+  *  - GRAMS come from the native [[graft.functions.Shingles]] kernel: one
+  *    pass over the UTF-8 bytes, O(len·n) per document (the per-position
+  *    substr spelling re-walks the bytes for every position, O(len²)).
+  *    Every caller keeps length(t) >= n, where the kernel's output is
+  *    exactly the positional n-gram list.
+  *  - SCORING is one row-local function ([[LiteralLangIdModel.classify]]):
+  *    count the document's grams, sum k·logp per language as exact
+  *    scale-6 longs, argmax with a lexicographic tie-break. The model
+  *    rides as a broadcast variable; no join, no shuffle, no state, so
+  *    batch, serving and streaming share it.
+  *
+  * TRAIN is one vocabulary-bounded (lang, gram) count aggregation,
+  * collected once; the log-probs are evaluated by Spark expressions over
+  * a local relation of those counts (no further job).
   *
   * Determinism (SURVEY §2.1 R2/R7): each profile log-probability is
   * computed ONCE from exact longs — one IEEE division, one libm ln,
   * round(,6) capping last-ulp divergence (the j32 recipe) — and stored
-  * as DECIMAL(18,6); per-document scores are then EXACT decimal sums
-  * (associative, map-side-combinable, identical at any parallelism and
-  * on any engine), so the argmax — and the gated confusion matrix — is
-  * bit-stable cross-engine with a lexicographic tie-break.
+  * as DECIMAL(18,6); per-document scores are EXACT sums of those values
+  * (integers at scale 6, identical at any parallelism and on any
+  * engine), so the argmax — and the gated confusion matrix — is
+  * bit-stable cross-engine.
   *
-  * 100 TB note: the broadcast profile is (distinct grams × languages);
-  * for open-vocabulary scripts cap it with [[trainCapped]] (top-V grams
-  * by global frequency, deterministic tie-break) — V=50k × 100 langs
-  * ≈ a few hundred MB of strings, still broadcast-range after the cap.
+  * Model-size bound: the collected model is (distinct grams × languages)
+  * — the size the broadcast profile always had. For open-vocabulary
+  * scripts cap it with [[trainCapped]] (top-V grams by global frequency,
+  * deterministic tie-break); [[literalModel]]'s `maxEntries` guard makes
+  * the bound explicit for serving callers. V=50k × 100 langs is 5M longs
+  * (40 MB) per executor.
   */
 object LangIdOps {
 
-  /** All char n-grams of `t` (lowercased by the callers), positionally:
-    * substr is 1-based, the last start leaves exactly n chars.
+  /** Trained model — per-(lang, gram) smoothed log-probs and per-lang
+    * unseen-gram defaults, as local relations over the collected counts.
     */
-  private def gramsExpr(n: Int): Column =
-    expr(s"transform(sequence(1, length(t) - ${n - 1}), i -> substr(t, i, $n))")
-
-  /** (lang-or-id columns..., g) — one row per n-gram OCCURRENCE. */
-  private def explodeGrams(docs: DataFrame, keep: Seq[String], n: Int,
-                           textCol: String): DataFrame =
-    docs.select(keep.map(col) :+ lower(col(textCol)).as("t"): _*)
-      .where(length(col("t")) >= n)
-      .select(keep.map(col) :+ explode(gramsExpr(n)).as("g"): _*)
-
-  /** Trained model — three SMALL DataFrames (vocabulary-bounded), never
-    * collected: per-(lang, gram) smoothed log-probs, per-lang unseen-gram
-    * default, and the candidate language set.
-    */
-  final case class LangIdModel(profiles: DataFrame, defaults: DataFrame,
-                               langs: DataFrame, n: Int)
+  final case class LangIdModel(profiles: DataFrame, defaults: DataFrame, n: Int)
 
   /** Fit n-gram profiles from a labeled corpus (`langCol` + `textCol`).
     * Smoothing is add-one over the TRAINING vocabulary V:
     * p(g|lang) = (c + 1) / (total_lang + V); unseen grams score
-    * 1 / (total_lang + V). Wholly relational — two corpus-gram
-    * aggregations and a scalar broadcast.
+    * 1 / (total_lang + V). One corpus aggregation, collected.
     */
   def train(labeled: DataFrame, n: Int = 2, langCol: String = "lang",
-            textCol: String = "text"): LangIdModel = {
-    val bg = explodeGrams(labeled, Seq(langCol), n, textCol)
-      .withColumnRenamed(langCol, "lang")
-    // ONE corpus gram pass: the per-(lang, gram) counts are the finest
-    // grain, so the per-lang totals (Σ occurrences = Σ c) and the global
-    // vocabulary (distinct grams) are exact rollups of the cnt table —
-    // vocabulary×languages-bounded aggregations, never a second corpus
-    // explode. (The r19 spelling aggregated bg three times; with the
-    // profile join consumers that planned SIXTEEN corpus scans in j60 —
-    // the r20 before-plan.) cnt is materialized once for its three
-    // consumers; it is the model's own bounded size by construction.
-    trainFromCounts(trainCounts(bg),
-      labeled.select(col(langCol).as("cand")).distinct(), n)
+            textCol: String = "text"): LangIdModel =
+    fromCounts(labeled.sparkSession, gramCounts(labeled, n, langCol, textCol),
+      n, _ => true)
+
+  /** The (lang, gram, count) table over the lowercased text — the
+    * model's own size.
+    */
+  private def gramCounts(labeled: DataFrame, n: Int, langCol: String,
+                         textCol: String): Array[(String, String, Long)] = {
+    Shingles.register(labeled.sparkSession)
+    labeled.select(col(langCol), lower(col(textCol)).as("t"))
+      .where(length(col("t")) >= n)
+      .select(col(langCol), explode(call_function(Shingles.name, col("t"), lit(n))).as("g"))
+      .groupBy(col(langCol), col("g")).agg(count(lit(1)))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
   }
 
-  /** The per-(lang, gram) occurrence counts — ONE corpus gram pass,
-    * materialized (the table is vocabulary×languages-bounded, the model's
-    * own size) so the three rollups above never re-run the explode.
+  /** Model assembly: per-lang totals and the vocabulary size are exact
+    * rollups of the counts (the vocabulary includes unlabeled docs' grams);
+    * only labeled languages become candidates. Profile rows are kept for
+    * grams passing `kept`.
     */
-  private def trainCounts(bg: DataFrame): DataFrame =
-    graft.ops.ckpt(bg.groupBy("lang", "g").agg(count(lit(1)).as("c")))
-
-  /** Model assembly from a materialized count table: per-lang totals and
-    * the vocabulary are exact rollups of `cnt` (Σ c per lang ≡ occurrence
-    * count per lang; distinct g over cnt ≡ distinct g over occurrences).
-    */
-  private def trainFromCounts(cnt: DataFrame, langs: DataFrame,
-                              n: Int): LangIdModel = {
-    val tot = cnt.groupBy("lang").agg(sum(col("c")).as("nl"))
-    val voc = cnt.agg(countDistinct(col("g")).as("v"))
-    val prof = cnt.join(tot, "lang").crossJoin(broadcast(voc))
+  private def fromCounts(spark: SparkSession, counts: Array[(String, String, Long)],
+                         n: Int, kept: String => Boolean): LangIdModel = {
+    import spark.implicits._
+    val v = counts.iterator.map(_._2).distinct.size.toLong
+    val labeled = counts.filter(_._1 != null)
+    val nl = labeled.groupMapReduce(_._1)(_._3)(_ + _)
+    val dec = DecimalType(18, 6)
+    val prof = labeled.collect { case (l, g, c) if kept(g) => (l, g, c, nl(l) + v) }
+      .toSeq.toDF("lang", "g", "c", "nv")
       .select(col("lang"), col("g"),
-        round(log((col("c") + 1).cast("double")
-          / (col("nl") + col("v")).cast("double")), 6)
-          .cast(DecimalType(18, 6)).as("logp"))
-    val dflt = tot.crossJoin(broadcast(voc))
+        round(log((col("c") + 1).cast("double") / col("nv").cast("double")), 6)
+          .cast(dec).as("logp"))
+    val dflt = nl.toSeq.map { case (l, t) => (l, t + v) }.toDF("lang", "nv")
       .select(col("lang"),
-        round(log(lit(1.0) / (col("nl") + col("v")).cast("double")), 6)
-          .cast(DecimalType(18, 6)).as("logp0"))
-    LangIdModel(prof, dflt, langs, n)
+        round(log(lit(1.0) / col("nv").cast("double")), 6).cast(dec).as("logp0"))
+    LangIdModel(prof, dflt, n)
   }
+
+  /** Spark's string order (UTF-8 bytes, unsigned) — the `ORDER BY` order. */
+  private def sparkLess(a: String, b: String): Boolean =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
 
   /** [[train]] with the profile vocabulary capped to the `cap` globally
     * most frequent grams (count-desc, gram-asc — deterministic): the
@@ -120,116 +112,109 @@ object LangIdOps {
     */
   def trainCapped(labeled: DataFrame, cap: Int, n: Int = 2,
                   langCol: String = "lang", textCol: String = "text"): LangIdModel = {
-    val bg = explodeGrams(labeled, Seq(langCol), n, textCol)
-      .withColumnRenamed(langCol, "lang")
-    val cnt = trainCounts(bg)
-    val m = trainFromCounts(cnt,
-      labeled.select(col(langCol).as("cand")).distinct(), n)
-    // global gram frequency is another exact rollup of the SAME count
-    // table (Σ_lang c) — the r19 spelling re-exploded the corpus for it
-    val kept = cnt.groupBy("g").agg(sum(col("c")).as("c"))
-      .orderBy(desc("c"), asc("g")).limit(cap).select("g")
-    m.copy(profiles = m.profiles.join(broadcast(kept), "g"))
+    val counts = gramCounts(labeled, n, langCol, textCol)
+    val kept = counts.groupMapReduce(_._2)(_._3)(_ + _).toSeq
+      .sortWith { case ((g1, c1), (g2, c2)) => c1 > c2 || c1 == c2 && sparkLess(g1, g2) }
+      .take(cap).map(_._1).toSet
+    fromCounts(labeled.sparkSession, counts, n, kept)
   }
 
-  /** doc_id → predicted language. Corpus-side cost: one gram explode,
-    * one (doc, gram) pre-aggregate, a broadcast profile join, one
-    * (doc, candidate) decimal-sum aggregate, one bounded-heap argmax.
+  /** doc_id → predicted language, through the row-local scorer. `train`
+    * already holds the model on the driver, so no entry cap applies here.
     */
-  def predict(docs: DataFrame, m: LangIdModel,
-              textCol: String = "text"): DataFrame =
-    scoreArgmax(explodeGrams(docs, Seq("doc_id"), m.n, textCol)
-      .groupBy("doc_id", "g").agg(count(lit(1)).as("k")), m)
+  def predict(docs: DataFrame, m: LangIdModel, textCol: String = "text"): DataFrame =
+    predictRowLocal(docs, literalModel(m, Int.MaxValue), textCol)
 
-  /** Scoring + argmax over a pre-aggregated (doc_id, g, k) gram-count
-    * table — split out so a caller that already holds the per-doc gram
-    * support (j60 trains and classifies the SAME corpus) skips the
-    * second corpus explode.
+  /** Raised when a document's exact score leaves the long range at scale 6:
+    * a named failure instead of a wrapped sum and a wrong argmax.
     */
-  private def scoreArgmax(dgc: DataFrame, m: LangIdModel): DataFrame = {
-    val scored = dgc
-      .crossJoin(broadcast(m.langs))
-      .join(broadcast(m.profiles.withColumnRenamed("lang", "cand")),
-        Seq("cand", "g"), "left")
-      .join(broadcast(m.defaults.withColumnRenamed("lang", "cand")), Seq("cand"))
-      .select(col("doc_id"), col("cand"),
-        (col("k").cast(DecimalType(10, 0))
-          * coalesce(col("logp"), col("logp0"))).as("term"))
-      .groupBy("doc_id", "cand")
-      .agg(sum(col("term")).as("score"))
-    val w = Window.partitionBy("doc_id")
-      .orderBy(col("score").desc, col("cand").asc)
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-      .select(col("doc_id"), col("cand").as("pred"))
+  final class LangIdScoreOverflow(msg: String) extends ArithmeticException(msg)
+
+  /** A model collected for ROW-LOCAL scoring. `langs` is the candidate set
+    * in tie-break order ([[literalModel]] sorts it ascending); `logp(g)(l)`
+    * is gram g's log-prob in `langs(l)` as a scale-6 unscaled long (that
+    * language's default where the pair was unseen in training); `logp0(l)`
+    * scores grams outside the vocabulary.
+    */
+  final case class LiteralLangIdModel(langs: IndexedSeq[String],
+                                      logp: Map[String, Array[Long]],
+                                      logp0: Array[Long], n: Int) {
+
+    // UTF8String keys match the kernel's grams without decoding them
+    @transient private lazy val index: java.util.HashMap[UTF8String, Array[Long]] = {
+      val m = new java.util.HashMap[UTF8String, Array[Long]](logp.size * 2)
+      logp.foreach { case (g, row) => m.put(UTF8String.fromString(g), row) }
+      m
+    }
+
+    /** The argmax language of lowercased text `t` (length(t) >= n): the
+      * highest exact score, ties to the earliest language in `langs`.
+      */
+    def classify(t: String): String = {
+      val counts = scala.collection.mutable.HashMap.empty[UTF8String, Int]
+      Shingles.shingle(UTF8String.fromString(t), n).array.foreach { g =>
+        val u = g.asInstanceOf[UTF8String]
+        counts.update(u, counts.getOrElse(u, 0) + 1)
+      }
+      val score = new Array[Long](langs.size)
+      try counts.foreach { case (g, k) =>
+        val row = index.getOrDefault(g, logp0)
+        var l = 0
+        while (l < score.length) {
+          score(l) = Math.addExact(score(l), Math.multiplyExact(k.toLong, row(l)))
+          l += 1
+        }
+      } catch {
+        case e: ArithmeticException => throw new LangIdScoreOverflow(
+          s"language-ID score overflows a scale-6 long (${e.getMessage}) " +
+            s"for a ${t.length}-char document")
+      }
+      var best = -1
+      for (l <- score.indices) if (best < 0 || score(l) > score(best)) best = l
+      if (best < 0) null else langs(best)
+    }
   }
 
-  /** A model literalized for ROW-LOCAL scoring: per-language gram→logp
-    * maps plus defaults, as plain driver values. Bounded by
-    * construction — literalize a [[trainCapped]] model for open
-    * vocabularies; the guard refuses anything too big to inline.
-    */
-  final case class LiteralLangIdModel(langs: Seq[String],
-                                      profiles: Map[String, Map[String, java.math.BigDecimal]],
-                                      defaults: Map[String, java.math.BigDecimal],
-                                      n: Int)
-
-  /** Collect a (bounded) model into literals. The collected size is the
-    * broadcast profile's own size — vocabulary × languages — so this is
-    * exactly as bounded as the join-side model; the cap guard makes the
-    * contract explicit rather than OOMing the driver.
+  /** Collect a model into the scorer's form. The collected size is the
+    * profile's own size — vocabulary × languages — and the guard makes
+    * the contract explicit rather than OOMing the driver.
     */
   def literalModel(m: LangIdModel, maxEntries: Int = 500000): LiteralLangIdModel = {
     val prof = m.profiles.select("lang", "g", "logp").collect()
     require(prof.length <= maxEntries,
       s"model too large to literalize (${prof.length} > $maxEntries entries) — " +
         "train with trainCapped or raise maxEntries")
-    val profiles = prof.groupBy(_.getString(0)).map { case (l, rows) =>
-      l -> rows.map(r => r.getString(1) -> r.getDecimal(2)).toMap
+    def unscaled(d: java.math.BigDecimal): Long = d.setScale(6).unscaledValue.longValueExact
+    val dflt = m.defaults.collect().map(r => r.getString(0) -> unscaled(r.getDecimal(1)))
+      .sortWith((a, b) => sparkLess(a._1, b._1))
+    val at = dflt.map(_._1).zipWithIndex.toMap
+    val logp0 = dflt.map(_._2)
+    val logp = prof.groupBy(_.getString(1)).map { case (g, rows) =>
+      val row = logp0.clone()
+      rows.foreach(r => row(at(r.getString(0))) = unscaled(r.getDecimal(2)))
+      g -> row
     }
-    val defaults = m.defaults.collect()
-      .map(r => r.getString(0) -> r.getDecimal(1)).toMap
-    LiteralLangIdModel(defaults.keys.toSeq.sorted, profiles, defaults, m.n)
+    LiteralLangIdModel(dflt.map(_._1).toIndexedSeq, logp, logp0, m.n)
   }
 
-  /** ROW-LOCAL prediction: the serving shape — scoring is one codegen'd
-    * expression chain per row (gram extraction + a literal-map lookup
-    * fold per language + a struct argmax), NO join, NO shuffle, NO
-    * state; the model rides as literals the way I21 inlines corpus
-    * stats. Stream-legal by construction (stateless map), and EXACTLY
-    * equal to [[predict]]: per-language totals are decimal sums of the
-    * identical round(,6) terms, and decimal addition is associative and
-    * commutative, so the row-local fold and the relational aggregate
-    * produce the same exact value — LangIdSpec pins bit-equality.
+  /** `docs` with a `pred` column, for rows with at least one n-gram: the
+    * scorer runs per row with the model broadcast once, the
+    * [[BpeOps.encode]] shape. Stream-legal (a stateless projection).
+    */
+  private def withPrediction(docs: DataFrame, lm: LiteralLangIdModel,
+                             textCol: String): DataFrame = {
+    val bm = docs.sparkSession.sparkContext.broadcast(lm)
+    val scorer = udf((t: String) => bm.value.classify(t))
+    docs.where(length(lower(col(textCol))) >= lm.n)
+      .withColumn("pred", scorer(lower(col(textCol))))
+  }
+
+  /** ROW-LOCAL prediction: doc_id → predicted language. The serving and
+    * streaming entry point; [[predict]] is this scorer too.
     */
   def predictRowLocal(docs: DataFrame, lm: LiteralLangIdModel,
-                      textCol: String = "text"): DataFrame = {
-    val dec = DecimalType(28, 6)
-    val grams = expr(
-      s"transform(sequence(1, length(lower($textCol)) - ${lm.n - 1}), " +
-        s"i -> substr(lower($textCol), i, ${lm.n}))")
-    def scoreFor(lang: String): Column = {
-      val entries = lm.profiles.getOrElse(lang, Map.empty).toSeq.sortBy(_._1)
-      val mapLit =
-        if (entries.isEmpty) map().cast(org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, dec))
-        else map(entries.flatMap { case (g, p) =>
-          Seq(lit(g), lit(p).cast(dec)) }: _*)
-      val dflt = lit(lm.defaults(lang)).cast(dec)
-      // re-cast inside the fold: decimal + widens (28,6)→(29,6) and the
-      // aggregate accumulator must be closed under the merge; the cast
-      // is exact at any reachable score magnitude
-      aggregate(grams, lit(0).cast(dec),
-        (acc, g) => (acc + coalesce(element_at(mapLit, g), dflt)).cast(dec))
-    }
-    val ls = lm.langs.sorted
-    // struct max: highest score wins; ties go to the HIGHER reverse
-    // index = the lexicographically smallest language (predict's order)
-    val best = array_max(array(ls.zipWithIndex.map { case (l, i) =>
-      struct(scoreFor(l).as("s"), lit(ls.size - 1 - i).as("r"), lit(l).as("lang"))
-    }: _*))
-    docs.where(length(lower(col(textCol))) >= lm.n)
-      .select(col("doc_id"), best.getField("lang").as("pred"))
-  }
+                      textCol: String = "text"): DataFrame =
+    withPrediction(docs, lm, textCol).select("doc_id", "pred")
 
   /** j60 — the langid machinery gated end to end as an exact confusion
     * matrix: train bigram profiles on the corpus's own labels, classify
@@ -238,30 +223,14 @@ object LangIdOps {
     * signal (shared vocabulary), so the matrix is far from diagonal —
     * what the gate proves is the full train→score→argmax pipeline,
     * bit-stable cross-engine; LangIdSpec proves RECOVERY on planted
-    * languages with disjoint character statistics.
+    * languages with disjoint character statistics. The corpus is read
+    * twice: once by the training aggregation, once by the scorer, whose
+    * output carries `lang` straight into the matrix aggregation.
     */
   val j60_langid: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val n = 2
-    // Train and classify share ONE corpus gram explode: doc_id is the
-    // fixture's unique key, so the materialized (doc, lang, gram, k)
-    // pre-aggregate IS the per-doc gram support, and the model's
-    // (lang, gram) counts are its exact rollup (Σ k). The r19 spelling
-    // (train + predict each re-deriving from the raw table) planned 16
-    // documents scans / 40 exchanges. fanOut is load-bearing on the
-    // fixture: its scan is one row group, so without it the shared
-    // explode serializes onto one core inside the eager ckpt (measured
-    // 2.4 s construct-time); at production split counts fanOut is the
-    // identity.
-    val dglk = graft.ops.ckpt(
-      explodeGrams(ScaleOps.fanOut(docs), Seq("doc_id", "lang"), n, "text")
-        .groupBy("doc_id", "lang", "g").agg(count(lit(1)).as("k")))
-    val cnt = graft.ops.ckpt(
-      dglk.groupBy("lang", "g").agg(sum(col("k")).as("c")))
-    val m = trainFromCounts(cnt,
-      docs.select(col("lang").as("cand")).distinct(), n)
-    scoreArgmax(dglk.select(col("doc_id"), col("g"), col("k")), m)
-      .join(docs.select("doc_id", "lang"), "doc_id")
+    val lm = literalModel(train(docs), Int.MaxValue)
+    withPrediction(docs, lm, "text")
       .groupBy("lang", "pred")
       .agg(count(lit(1)).as("n"))
       .orderBy(asc_nulls_last("lang"), asc_nulls_last("pred"))

@@ -515,12 +515,13 @@ object StreamOps {
   /** I28: language identification applied to a document stream — the
     * j60 classifier as continuous ingestion: profiles TRAIN once on the
     * static labeled corpus (batch, [[graft.ops.LangIdOps.trainCapped]]
-    * bounds the vocabulary), the literalized model rides in the plan
-    * (the I21/I18 discipline), and scoring is
-    * [[graft.ops.LangIdOps.predictRowLocal]] — one codegen'd expression
-    * chain per row, no join, no state — so streaming and batch
-    * classification agree row-for-row (StreamingSpec I28 pins stream ≡
-    * batch ≡ the relational predict).
+    * bounds the vocabulary), the collected model rides as a broadcast
+    * variable (collected once, like the I21/I18 literals), and scoring is
+    * [[graft.ops.LangIdOps.predictRowLocal]] — the native shingles kernel
+    * plus one compiled scorer call per row against the broadcast model,
+    * no join, no state — so streaming and batch classification agree
+    * row-for-row (StreamingSpec I28 pins stream ≡ batch ≡ the test-side
+    * relational reference).
     */
   def langIdStream(docs: DataFrame,
                    model: graft.ops.LangIdOps.LiteralLangIdModel): DataFrame =

@@ -524,14 +524,17 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("I3: sliding window stream equals batch twin") {
-    val streamed = runStream(StreamOps.slidingCounts(StreamOps.eventsStream(spark, sf)),
-      "complete", "t_sliding")
+    // the batch twin is built and collected before the stream runs, so its
+    // adaptive plan never executes after a streaming query in the session
     val batch = batchEvents
       .groupBy(window(col("ets"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
+      .collect()
+    val streamed = runStream(StreamOps.slidingCounts(StreamOps.eventsStream(spark, sf)),
+      "complete", "t_sliding")
     assert(streamed.collect().map(_.toString).sorted
-      .sameElements(batch.collect().map(_.toString).sorted))
+      .sameElements(batch.map(_.toString).sorted))
   }
 
   test("I4: session window stream equals batch session_window") {
@@ -783,8 +786,8 @@ class StreamingSpec extends SparkSuite {
   test("I28: streaming language ID equals batch classification row-for-row") {
     import graft.ops.LangIdOps
     val batchDocs = Tables.documents(spark, sf)
-    val model = LangIdOps.literalModel(
-      LangIdOps.trainCapped(batchDocs, cap = 2000))
+    val capped = LangIdOps.trainCapped(batchDocs, cap = 2000)
+    val model = LangIdOps.literalModel(capped)
     val streamed = runStream(
       StreamOps.langIdStream(StreamOps.documentsStream(spark, sf), model),
       "append", "t_langid")
@@ -793,12 +796,11 @@ class StreamingSpec extends SparkSuite {
       .orderBy("doc_id").collect().toSeq
     assert(streamed.nonEmpty && streamed == batch,
       "streamed langid diverges from batch classification")
-    // and the serving path agrees with the relational j60 path under
-    // the SAME capped model
-    val rel = LangIdOps.predict(batchDocs,
-      LangIdOps.trainCapped(batchDocs, cap = 2000))
-      .orderBy("doc_id").collect().toSeq
-    assert(batch == rel, "capped serving path diverges from relational predict")
+    // and the serving path agrees with the test-side relational scoring
+    // reference under the SAME capped model
+    val rel = LangIdReference.predict(batchDocs, capped.profiles, capped.defaults,
+      capped.n).orderBy("doc_id").collect().toSeq
+    assert(batch == rel, "capped serving path diverges from the relational reference")
   }
 
   test("I27: continuous WAL-shipping replication — replica equals primary " +
